@@ -221,8 +221,8 @@ def grouped_cumsum(
     window form at or below ``auto_threshold`` rows.
 
     The default 50M threshold is MEASURED, not guessed (round-11
-    value-cardinality probe, tools/probe_cumsum_cardinality.py, with
-    jittered replicas so distinct (group, value) grows with N): with
+    value-cardinality probe, SCALE.md sixteenth wave, with jittered
+    replicas so distinct (group, value) grows with N): with
     trivial downstream work the window form wins at EVERY reachable
     scale — 101.6 vs 155.7 s lazy / 54.0 vs 141.7 s on a
     materialized input at 49M rows (~10M rows per single-task sort)

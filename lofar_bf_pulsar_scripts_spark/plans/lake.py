@@ -113,6 +113,35 @@ def _swap_store_into_place(spark: SparkSession, tmp: str, path: str) -> None:
         raise RuntimeError(f"failed to promote {tmp} into {path}")
 
 
+def _ensure_store(src, path: str, write, marker: str = "_SUCCESS") -> str:
+    """The one store-build protocol behind every ``ensure_*``: when
+    ``path/marker`` is absent, ``write(df, tmp)`` builds the store into
+    a fresh ``path.tmp`` which is then swapped into place (first build
+    wins); otherwise a no-op.  Returns ``path``.
+
+    ``src`` is the source DataFrame or a ZERO-ARG CALLABLE returning
+    one, called only when the store must be built: a source that costs
+    jobs to construct (connected_components' driver union-find collects
+    edges at call time; a table load infers its schema) then costs
+    nothing once the store exists."""
+    spark = (
+        src.sparkSession
+        if isinstance(src, DataFrame)
+        else SparkSession.getActiveSession()
+    )
+    if spark is None:
+        raise RuntimeError(
+            "building a store from a callable source needs an active "
+            "SparkSession to probe the store path"
+        )
+    if not _store_exists(spark, f"{path.rstrip('/')}/{marker}"):
+        tmp = path.rstrip("/") + ".tmp"
+        _remove_store_dir(spark, tmp)
+        write(src() if callable(src) else src, tmp)
+        _swap_store_into_place(spark, tmp, path)
+    return path
+
+
 def write_embeddings_by_centroid(
     assigned: DataFrame,
     path: str,
@@ -148,13 +177,10 @@ def ensure_embeddings_by_centroid(
     calls are a no-op. This is the at-rest assignment SemDeDup and
     IVF probes share: the kmeans/ivf assign is paid once at ingest,
     every downstream consumer gets a partition-prunable scan."""
-    spark = assigned.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_embeddings_by_centroid(assigned, tmp, centroid_col)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _ensure_store(
+        assigned, path,
+        lambda df, tmp: write_embeddings_by_centroid(df, tmp, centroid_col),
+    )
 
 
 def read_probed_centroids(
@@ -212,13 +238,9 @@ def ensure_lsh_signatures(
     """Build the at-rest LSH signature store once (atomic: write to a
     tmp dir, rename into place); later calls are a no-op. Returns the
     path."""
-    spark = corpus.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_lsh_signatures(corpus, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _ensure_store(
+        corpus, path, lambda df, tmp: write_lsh_signatures(df, tmp, **kwargs)
+    )
 
 
 def write_minhash_bands(
@@ -257,14 +279,11 @@ def ensure_minhash_bands(
     **kwargs,
 ) -> str:
     """Build the at-rest MinHash band store once (atomic tmp-dir
-    rename, first build wins); later calls are a no-op."""
-    spark = docs.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_minhash_bands(docs, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    rename, first build wins); later calls are a no-op.  ``docs`` may
+    be a zero-arg callable returning the corpus (``_ensure_store``)."""
+    return _ensure_store(
+        docs, path, lambda df, tmp: write_minhash_bands(df, tmp, **kwargs)
+    )
 
 
 def build_trained_pq_store(
@@ -484,13 +503,11 @@ def upsert_trained_pq(
 def ensure_trained_pq_store(corpus: DataFrame, path: str, **kwargs) -> str:
     """Build the trained PQ store once (atomic tmp-dir rename, first
     build wins); later calls are a no-op."""
-    spark = corpus.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/model/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        build_trained_pq_store(corpus, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _ensure_store(
+        corpus, path,
+        lambda df, tmp: build_trained_pq_store(df, tmp, **kwargs),
+        marker="model/_SUCCESS",
+    )
 
 
 def read_trained_pq_model(
@@ -818,13 +835,11 @@ def ensure_trained_ivf_pq_store(
 ) -> str:
     """Build the IVF-pruned trained-PQ store once (atomic tmp-dir
     rename, first build wins); later calls are a no-op."""
-    spark = corpus.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/model/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        build_trained_ivf_pq_store(corpus, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _ensure_store(
+        corpus, path,
+        lambda df, tmp: build_trained_ivf_pq_store(df, tmp, **kwargs),
+        marker="model/_SUCCESS",
+    )
 
 
 def read_trained_ivf_pq_model(
@@ -1272,24 +1287,9 @@ def ensure_components_store(comp, path: str, **kwargs) -> str:
     the full clustering on every ensure even when the store already
     exists — the thunk defers that work to the one build that needs
     it."""
-    spark = (
-        comp.sparkSession
-        if isinstance(comp, DataFrame)
-        else SparkSession.getActiveSession()
+    return _ensure_store(
+        comp, path, lambda df, tmp: write_components_store(df, tmp, **kwargs)
     )
-    if spark is None:
-        raise RuntimeError(
-            "ensure_components_store with a thunk needs an active "
-            "SparkSession to probe the store path"
-        )
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        if callable(comp):
-            comp = comp()
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_components_store(comp, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
 
 
 def read_components_store(
@@ -1442,13 +1442,9 @@ def ensure_pq_codes(
 ) -> str:
     """Build the at-rest PQ code store once (atomic tmp+rename, same
     protocol as ensure_lsh_signatures); later calls are a no-op."""
-    spark = assigned.sparkSession
-    if not _store_exists(spark, path.rstrip("/") + "/_SUCCESS"):
-        tmp = path.rstrip("/") + ".tmp"
-        _remove_store_dir(spark, tmp)
-        write_pq_codes(assigned, tmp, **kwargs)
-        _swap_store_into_place(spark, tmp, path)
-    return path
+    return _ensure_store(
+        assigned, path, lambda df, tmp: write_pq_codes(df, tmp, **kwargs)
+    )
 
 
 def lsh_ann_topk_stored(
@@ -1514,20 +1510,7 @@ def lsh_ann_topk_stored(
             # (1+h) x n_tables partitions instead of n_tables
             for b in {bkt} | {bkt ^ (1 << j) for j in range(h)}:
                 pair_rows.append((r[query_id_col], qv, t, b))
-    if not pair_rows:
-        empty = f"{query_id_col} long, {id_col} long, cos double"
-        return spark.createDataFrame([], empty)
-    q_ex = spark.createDataFrame(
-        pair_rows, ["__qid", "__qvec", "tbl", "bkt"]
-    )
     pairs = {(t, b) for _, _, t, b in pair_rows}
-    pred = _reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("tbl") == t) & (F.col("bkt") == b)
-            for t, b in sorted(pairs)
-        ],
-    )
     # Listing-level pruning (r15, guide §6): a plain
     # spark.read.parquet(root) runs partition DISCOVERY over every
     # leaf directory of the store (2^n_bits x n_tables dirs) on the
@@ -1539,17 +1522,32 @@ def lsh_ann_topk_stored(
     # pred keeps the pruning visible in the plan (PartitionFilters,
     # test-asserted) and guards against stray files.  Missing dirs
     # (an empty probed bucket) are skipped exactly as the pruned
-    # scan skipped them.
+    # scan skipped them; with no valid query or no probed dir at all
+    # the result is empty.  Ids keep the input columns' types either
+    # way.
     base = store_path.rstrip("/")
     leaf = [
         p
         for p in (f"{base}/tbl={t}/bkt={b}" for t, b in sorted(pairs))
         if _store_exists(spark, p)
     ]
-    if not leaf:
-        empty = f"{query_id_col} long, {id_col} long, cos double"
-        return spark.createDataFrame([], empty)
     id_type = corpus.schema[id_col].dataType.simpleString()
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
+    if not leaf:
+        return spark.createDataFrame(
+            [], f"{query_id_col} {qid_type}, {id_col} {id_type}, cos double"
+        )
+    q_ex = spark.createDataFrame(
+        pair_rows,
+        f"__qid {qid_type}, __qvec array<double>, tbl bigint, bkt bigint",
+    )
+    pred = _reduce(
+        lambda a, b: a | b,
+        [
+            (F.col("tbl") == t) & (F.col("bkt") == b)
+            for t, b in sorted(pairs)
+        ],
+    )
     store = (
         spark.read.schema(f"{id_col} {id_type}, tbl int, bkt bigint")
         .option("basePath", base)

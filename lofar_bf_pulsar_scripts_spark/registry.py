@@ -76,20 +76,21 @@ def _lsh_store_path(sf_dir: str, src_table: str = "embeddings", **params) -> str
 def _ensure_band_store(spark: SparkSession, sf_dir: str) -> str:
     """The corpus MinHash band store's deterministic location, built
     on first use — ONE helper for every consumer (prebuild_stores,
-    the incremental-CC inputs, the forget gate): a drifted copy of
-    the (nh, k, b, r) parameters would silently build/probe a
-    DIFFERENT store at a different key (round-12 review)."""
+    incremental_near_dup, the incremental-CC inputs, the forget gate):
+    a drifted copy of the (nh, k, b, r) parameters would silently
+    build/probe a DIFFERENT store at a different key (round-12
+    review).  The documents table is loaded only when the store is
+    built."""
     path = _lsh_store_path(
         sf_dir, src_table="documents",
         kind="minhash_bands", nh=_NUM_MINHASH, k=3, b=4, r=2,
     )
     from .plans.lake import ensure_minhash_bands
 
-    ensure_minhash_bands(
-        load_table(spark, "documents", sf_dir), path,
+    return ensure_minhash_bands(
+        lambda: load_table(spark, "documents", sf_dir), path,
         num_hashes=_NUM_MINHASH, shingle_k=3, bands=4, rows_per_band=2,
     )
-    return path
 
 
 def prebuild_stores(spark: SparkSession, sf_dir: str) -> dict[str, float]:
@@ -1813,17 +1814,9 @@ def _incremental_near_dup_oracle(tau_num: int = 5, tau_den: int = 10) -> str:
 )
 def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import incremental_near_dup
-    from .plans.lake import ensure_minhash_bands
 
+    store = _ensure_band_store(spark, sf_dir)
     d = load_table(spark, "documents", sf_dir)
-    store = _lsh_store_path(
-        sf_dir, src_table="documents",
-        kind="minhash_bands", nh=_NUM_MINHASH, k=3, b=4, r=2,
-    )
-    ensure_minhash_bands(
-        d, store, num_hashes=_NUM_MINHASH, shingle_k=3,
-        bands=4, rows_per_band=2,
-    )
     batch = d.filter("doc_id % 41 = 7")
     return incremental_near_dup(
         batch, d, spark.read.parquet(store), tau_num=5, tau_den=10
@@ -5211,7 +5204,7 @@ def q_sketch_exact_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row-for-row identical because ties share a bucket and the
     # within-bucket frame is RANGE).  "auto" dispatches on the
     # measured input size: below the measured ~50M-row crossover
-    # (tools/probe_cumsum_cardinality.py — with this gate's trivial
+    # (SCALE.md, the value-cardinality probe — with this gate's trivial
     # post-window work the window form won at every reachable
     # cardinality) the plain window skips the bucketed path's extra
     # passes (the r9→r10 sf0.1 regression); past it the bucketed
@@ -10085,6 +10078,10 @@ _TAIL: tuple[str, ...] = (
 # local_supplier_volume, off_window_stats, payload_metadata — each
 # green in the r14 window, byte-identical since).  check_window.py vs
 # the r15 round-start commit (8acac36) verifies coverage mechanically.
+# Store-protocol amendment: incremental_near_dup now reaches its band
+# store through _ensure_band_store and sketch_exact_check's source
+# changed (a comment), so both re-gate, funded by demoting two
+# UNCHANGED gates of the r14 cohort (running_revenue, tsky_scaled).
 _PROMOTE: tuple[str, ...] = (
     "trained_ivf_pq_upsert",
     "training_data_pipeline",
@@ -10108,6 +10105,9 @@ _PROMOTE: tuple[str, ...] = (
     "pii_redaction_stats",
     "pq_adc_top3",
     "semantic_dedup_stats",
+    # store-protocol changed-gate promotions
+    "incremental_near_dup",
+    "sketch_exact_check",
     # r14 cohort retained
     "catalog_union",
     "dup_clusters",
@@ -10128,14 +10128,12 @@ _PROMOTE: tuple[str, ...] = (
     "regex_filter_parts",
     "rfi_zap_fraction",
     "rollup_pricing",
-    "running_revenue",
     "salted_event_type_volume",
     "shipping_priority",
     "simhash_docs",
     "streaming_asof_joins_exact",
     "top_customer_per_nation",
     "tsky_map_lookup",
-    "tsky_scaled",
     "wijnholds_aeff_lookup",
     "wijnholds_channel_calibration",
 )

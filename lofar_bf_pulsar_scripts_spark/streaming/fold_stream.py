@@ -134,52 +134,31 @@ def run_bounded(
     there returns an empty table, caught by the oracle gate when this
     default first landed).
 
-    State-store provider: ``SPARK_GRAFT_STREAM_STATE_PROVIDER=rocksdb``
-    switches the replay to the RocksDB provider (with changelog
-    checkpointing) — the production choice for state far beyond
-    executor memory.  Default is the session default (HDFS-backed):
-    an r15 alternating A/B at sf0.1 (~174k state rows) measured
-    RocksDB WORSE for these bounded replays (funnel-joins chain
-    min-of-4 4.05 -> 5.29 s, as-of joins 3.44 -> 4.05 s) — the
+    State-store provider: the session's own
+    ``spark.sql.streaming.stateStore.providerClass`` (HDFS-backed by
+    default).  An r15 alternating A/B at sf0.1 (~174k state rows)
+    measured RocksDB WORSE for these bounded replays (funnel-joins
+    chain min-of-4 4.05 -> 5.29 s, as-of joins 3.44 -> 4.05 s) — the
     per-query native store open/commit overhead dominates until state
-    outgrows memory, so the knob exists but stays off locally.
+    outgrows memory; a deployment whose state does sets the provider
+    on its session.
 
-    Conf scope: the three conf flips below are SESSION-GLOBAL and
+    Conf scope: the two conf flips below are SESSION-GLOBAL and
     restored in ``finally`` — run_bounded is not safe to call
     concurrently with another bounded replay (or any other streaming
     query) in the same session; every set happens INSIDE the try that
     owns the restore, so no setting can leak on an exception."""
-    import os
-
     spark = query_df.sparkSession
     _NDB = "spark.sql.streaming.noDataMicroBatches.enabled"
     _PARTS = "spark.sql.shuffle.partitions"
-    _PROV = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     prev_ndb = spark.conf.get(_NDB, "true")
     prev_parts = None
-    prev_prov = None
-    use_rocksdb = (
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER", "").lower()
-        == "rocksdb"
-    )
     try:
         if not watermark_flush:
             spark.conf.set(_NDB, "false")
         if shuffle_partitions is not None:
             prev_parts = spark.conf.get(_PARTS)
             spark.conf.set(_PARTS, str(shuffle_partitions))
-        if use_rocksdb:
-            prev_prov = spark.conf.get(_PROV, None)
-            spark.conf.set(_PROV, _ROCKSDB)
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled",
-                "true",
-            )
         writer = (
             query_df.writeStream.outputMode(mode)
             .format("memory")
@@ -199,11 +178,6 @@ def run_bounded(
         spark.conf.set(_NDB, prev_ndb)
         if prev_parts is not None:
             spark.conf.set(_PARTS, prev_parts)
-        if use_rocksdb:
-            if prev_prov is None:
-                spark.conf.unset(_PROV)
-            else:
-                spark.conf.set(_PROV, prev_prov)
     return spark.table(name)
 
 

@@ -200,6 +200,45 @@ def test_lsh_ann_topk_stored_parity_and_pruning(spark, tmp_path):
     assert a == b and a
 
 
+
+def test_lsh_ann_topk_stored_missing_buckets_keeps_id_types(spark, tmp_path):
+    """A probe whose every (tbl, bkt) directory is absent from the store
+    returns an empty result typed like the non-empty one: ids keep the
+    corpus's and the queries' column types (string here), not long."""
+    import os
+
+    from lofar_bf_pulsar_scripts_spark.operators.similarity import (
+        hyperplane_buckets_py,
+    )
+    from lofar_bf_pulsar_scripts_spark.plans.lake import (
+        ensure_lsh_signatures,
+        lsh_ann_topk_stored,
+    )
+
+    v = [float((i * 7) % 11) - 5.0 for i in range(64)]
+    corpus = spark.createDataFrame(
+        [("doc-a", v)], "vec_id string, embedding array<double>"
+    )
+    # the negated vector lands on the other side of every hyperplane
+    q = spark.createDataFrame(
+        [("query-a", [-x for x in v])], "qid string, embedding array<double>"
+    )
+    path = str(tmp_path / "ann_store_str")
+    ensure_lsh_signatures(corpus, path, n_tables=4, n_bits=6, dims=64)
+    probed = {
+        f"tbl={t}/bkt={b}"
+        for t, b in enumerate(
+            hyperplane_buckets_py([-x for x in v], 4, 6, 64, 1e6)
+        )
+    }
+    assert not any(os.path.isdir(os.path.join(path, d)) for d in probed)
+    out = lsh_ann_topk_stored(
+        corpus, q, path, k=5, n_tables=4, n_bits=6, dims=64
+    )
+    assert out.collect() == []
+    types = {f.name: f.dataType.simpleString() for f in out.schema.fields}
+    assert types == {"qid": "string", "vec_id": "string", "cos": "double"}
+
 def test_salted_join_equals_plain_join(spark):
     from lofar_bf_pulsar_scripts_spark.operators.skew import salted_join
     from lofar_bf_pulsar_scripts_spark.tables import load_table

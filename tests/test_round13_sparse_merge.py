@@ -4,8 +4,8 @@ buckets, so its measured exponent (0.40) was the full-rewrite worst
 case.  This pins the proportional-IO law at fixture scale:
 buckets_rewritten is bounded by the touched components' bucket set,
 never n_buckets, and untouched bucket directories keep their files
-byte-identical.  The timed 10x/100x counterpart lives in
-tools/probe_components_merge.py --sparse (SCALE.md wave 17)."""
+byte-identical.  The timed 10x/100x counterpart is recorded in
+SCALE.md wave 17, "Sparse-touch components merge"."""
 
 import glob
 import os

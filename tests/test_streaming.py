@@ -922,3 +922,32 @@ def test_streaming_asof_joins_out_of_order_exact(spark, tmp_path):
         (2, 100): None,              # horizon bound: 90us gap > 50us
         (3, 30): "tie",              # inclusive <=
     }
+
+
+def test_run_bounded_leaves_session_conf_unchanged(spark, tmp_path, monkeypatch):
+    """run_bounded restores every conf it flips and reads no
+    environment override of the state-store provider: after a replay
+    with its own shuffle partitions and no watermark-flush batch, the
+    provider, changelog, no-data-batch and shuffle-partition settings
+    read exactly as before."""
+    import shutil
+
+    from lofar_bf_pulsar_scripts_spark.streaming.fold_stream import run_bounded
+
+    keys = (
+        "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.shuffle.partitions",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PROVIDER", "rocksdb")
+    shutil.copy(f"{SF_DIR}/events.parquet", tmp_path / "events.parquet")
+    counts = run_bounded(
+        stream_events(spark, str(tmp_path)).groupBy("user_id").count(),
+        "conf_scope_replay",
+        shuffle_partitions=3,
+        watermark_flush=False,
+    )
+    assert counts.count() > 0
+    assert {k: spark.conf.get(k, None) for k in keys} == before
